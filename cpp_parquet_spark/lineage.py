@@ -2,57 +2,93 @@
 
 North-rule component: "per-partition checkpoint/lineage records in an
 Iceberg metadata table enabling resume after failure".  No Iceberg jars
-exist in this sandbox (SURVEY.md §7), so the catalog is emulated as a
-partitioned-parquet chunk store plus a lineage table whose schema
-matches an Iceberg snapshot/manifest row (snapshot_id, partition,
-file count, record_count, bytes, status, attempt, committed_at); the
-engine touches it only through this module, so a real Iceberg catalog
-could be dropped in behind the same calls.
+are available (SURVEY.md §7), so the catalog is emulated with Iceberg's
+own design: data files that are written once and never move, plus
+committed manifests that list them.  A lineage row matches an Iceberg
+snapshot/manifest row (snapshot_id, partition, files, chunk count,
+record_count, bytes, status, attempt, committed_at); the engine touches
+the store only through this module, so a real Iceberg catalog could be
+dropped in behind the same calls.
 
 Determinism is the key design point: the partition id is a *content
 hash* — pmod(xxhash64(lang, repo, salt), num_parts) — not a task id,
 so a resumed job re-derives exactly the same partition → rows mapping
-and can skip completed partitions with a filter (an anti-join against
-the lineage table).  Orphan chunk directories from a crash between
-data write and lineage commit are detected and dropped on resume.
+and skips the partitions its snapshot already committed with a filter.
+
+Orphans are handled by visibility, not repair: readers open only the
+files a committed manifest lists, so the file of a task whose job died
+before its commit, or lost a commit race, is never read.  Unlisted
+files are garbage-collected once they are older than
+``stale_staging_sec``.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
-import shutil
 import time
+from collections import defaultdict
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS, decode_dataframe, encode_dataframe
+from cpp_parquet_spark.engine import CHUNK_SCHEMA, DEFAULT_CHUNK_ROWS, decode_dataframe, encode_dataframe
+
 
 class ConcurrentCommitError(RuntimeError):
     """Raised when the snapshot-commit CAS loses to a concurrent writer
     (two EncodeJobs racing on the same base_dir + snapshot_id)."""
 
 
-LINEAGE_COLUMNS = [
-    "snapshot_id",
-    "part_id",
-    "chunk_count",
-    "record_count",
-    "encoded_bytes",
-    "plain_bytes",
-    "status",
-    "attempt",
-    "committed_at",
-]
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("snapshot_id", pa.string()),
+        ("part_id", pa.int32()),
+        ("chunk_count", pa.int64()),
+        ("record_count", pa.int64()),
+        ("encoded_bytes", pa.int64()),
+        ("plain_bytes", pa.int64()),
+        ("status", pa.string()),
+        ("attempt", pa.int32()),
+        ("committed_at", pa.string()),
+        ("files", pa.list_(pa.string())),  # chunk file names under chunks/
+    ]
+)
+
+# one row per (chunk file, part_id), returned by the task-side writer
+_MANIFEST = pa.schema(
+    [
+        ("file", pa.string()),
+        ("part_id", pa.int32()),
+        ("chunk_count", pa.int64()),
+        ("record_count", pa.int64()),
+        ("encoded_bytes", pa.int64()),
+        ("plain_bytes", pa.int64()),
+    ]
+)
+_TOTALS = ("chunk_count", "record_count", "encoded_bytes", "plain_bytes")
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
 
 
 class EncodeJob:
     """A checkpointed encode job writing to ``base_dir``.
 
     Layout:
-      base_dir/chunks/part_id=N/*.parquet   — encoded column chunks
-      base_dir/lineage/*.parquet            — commit records
+      base_dir/chunks/<snapshot>-a<attempt>-p<pid>-t<task>.parquet
+          CHUNK_SCHEMA rows of one encode task (``part_id`` is a
+          column); written once, never moved
+      base_dir/chunks/.<name>.tmp
+          a task's file while it is being written
+      base_dir/lineage/commit-<snapshot>-a<attempt>.parquet
+          the commit: one lineage row per partition, whose ``files``
+          lists the chunk files holding it
     """
 
     def __init__(
@@ -63,7 +99,6 @@ class EncodeJob:
         codec: str = "auto",
         chunk_rows: int = DEFAULT_CHUNK_ROWS,
         snapshot_id: str = "snap-0",
-        salt_target_rows: int = 1 << 20,
         stale_staging_sec: float = 3600.0,
     ) -> None:
         self.base_dir = base_dir
@@ -74,11 +109,9 @@ class EncodeJob:
         self.codec = codec
         self.chunk_rows = chunk_rows
         self.snapshot_id = snapshot_id
-        self.salt_target_rows = salt_target_rows
-        # minimum age before an UNCLAIMED staging dir / commit tmp is
-        # treated as a crash leftover rather than a live concurrent
-        # writer's workspace (ADVICE r5: unconditional cleanup deleted a
-        # live writer's staging mid-run)
+        # minimum age before an unlisted chunk file / commit tmp is
+        # treated as a crash leftover rather than the uncommitted output
+        # of a live concurrent writer
         self.stale_staging_sec = stale_staging_sec
 
     # -------------------------------------------------- partition key
@@ -90,341 +123,196 @@ class EncodeJob:
         key = F.xxhash64(*[F.col(k) for k in self.keys], salt)
         return df.withColumn("_part", F.pmod(key, F.lit(self.num_parts)).cast("int"))
 
-    # -------------------------------------------------- lineage access
+    # -------------------------------------------------- catalog
 
     def lineage(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.isdir(self.lineage_dir) or not os.listdir(self.lineage_dir):
             return None
         return spark.read.parquet(self.lineage_dir)
 
-    def completed_parts(self, spark: SparkSession) -> set[int]:
-        lin = self.lineage(spark)
-        if lin is None:
-            return set()
-        rows = (
-            lin.filter(F.col("status") == "committed")
-            .select("part_id")
-            .distinct()
-            .collect()
-        )
-        return {r["part_id"] for r in rows}
-
-    def _committed_parts_fs(self) -> set[int]:
-        """Driver-side (sparkless) read of committed part ids from the
-        lineage dir — used to re-check freshness immediately before a
-        destructive cleanup."""
-        import pyarrow.parquet as pq
-
-        if not os.path.isdir(self.lineage_dir) or not os.listdir(self.lineage_dir):
-            return set()
-        try:
-            tbl = pq.read_table(self.lineage_dir, columns=["part_id", "status"])
-        except Exception:  # noqa: BLE001 - unreadable catalog: claim nothing
-            return set()
-        d = tbl.to_pydict()
-        return {int(p) for p, s in zip(d["part_id"], d["status"]) if s == "committed"}
-
-    def _publish_staging(self, staging: str) -> None:
-        """Move a staging dir's part dirs into the chunk store.  Shared
-        by run() (after winning the commit CAS) and the resume-time
-        roll-forward of a claimed-but-unpublished attempt; racing
-        publishers tolerate dirs the other mover already took.
-
-        Race discipline (round-6 review): NEVER delete ``dst`` before
-        the claimed copy is in place — a racing roll-forward that
-        rmtree'd first could permanently delete the partition another
-        publisher had just placed (lineage would say committed, data
-        gone).  An occupied ``dst`` is moved ASIDE, the staged copy
-        moved in, and only then is the aside copy dropped; if a racer
-        took the staged copy first, the aside copy is restored."""
-        os.makedirs(self.chunks_dir, exist_ok=True)
-        try:
-            entries = os.listdir(staging)
-        except FileNotFoundError:  # pragma: no cover - racer finished the publish
-            return
-        for name in entries:
-            if not name.startswith("part_id="):
+    def _catalog(self) -> list[dict]:
+        """Every committed lineage row of every snapshot, read
+        driver-side with pyarrow (no Spark job)."""
+        rows: list[dict] = []
+        for name in sorted(_listdir(self.lineage_dir)):
+            if name.startswith((".", "_")):
                 continue
-            src = os.path.join(staging, name)
-            dst = os.path.join(self.chunks_dir, name)
-            try:
-                os.replace(src, dst)
-                continue
-            except FileNotFoundError:  # pragma: no cover - racer took src
-                continue
-            except OSError:
-                pass  # dst exists (non-empty dir): take the aside path
-            aside = f"{dst}.aside-{os.getpid()}"
-            try:
-                os.replace(dst, aside)
-            except FileNotFoundError:  # pragma: no cover - dst vanished: retry plain
-                with contextlib.suppress(FileNotFoundError):
-                    os.replace(src, dst)
-                continue
-            try:
-                os.replace(src, dst)
-            except FileNotFoundError:  # pragma: no cover - racer placed it
-                os.replace(aside, dst)
-            else:
-                shutil.rmtree(aside, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+            tbl = pq.read_table(os.path.join(self.lineage_dir, name))
+            if "files" not in tbl.column_names:
+                raise ValueError(
+                    f"commit {name!r} in {self.lineage_dir} has no 'files' column: it "
+                    "comes from the old part_id=N directory layout, which this build "
+                    "cannot read; re-encode into a new base_dir"
+                )
+            rows += tbl.to_pylist()
+        return rows
 
-    def _clean_orphans(self, completed: set[int]) -> list[int]:
-        """Resume-time repair (ADVICE r5 rework):
-
-        * staging dirs whose commit file EXISTS are a claimed attempt
-          that crashed mid-publish — roll the publish forward;
-        * unclaimed staging dirs / commit tmps are dropped only when
-          provably stale (older than ``stale_staging_sec``) — a fresh
-          one may belong to a live concurrent writer;
-        * chunk part dirs without committed lineage are crash orphans —
-          the committed set is re-read from the filesystem immediately
-          before deleting so a concurrently-landing commit is honored.
-        """
-        dropped = []
+    def _gc(self, listed: set[str]) -> list[str]:
+        """Delete chunk files that no commit lists, and commit tmps, once
+        they are older than ``stale_staging_sec``; a fresh one may belong
+        to a live writer that has not committed yet.  The catalog is
+        re-read just before deleting, so a commit that landed since
+        ``listed`` was read keeps its files."""
         now = time.time()
 
-        def _newest_mtime(root: str) -> float:
-            """Newest mtime anywhere under ``root`` — a live writer may
-            not touch the top-level dir for the whole duration of a long
-            task write, so the top-level mtime alone can look stale
-            mid-job."""
-            newest = os.path.getmtime(root)
-            for dirpath, _dirs, files in os.walk(root):
-                for entry in files:
-                    try:
-                        newest = max(newest, os.path.getmtime(os.path.join(dirpath, entry)))
-                    except OSError:  # pragma: no cover - racing writer
-                        pass
-            return newest
+        def stale(root: str, names: list[str]) -> list[str]:
+            out = []
+            for name in names:
+                path = os.path.join(root, name)
+                with contextlib.suppress(FileNotFoundError):
+                    if os.path.isfile(path) and now - os.path.getmtime(path) > self.stale_staging_sec:
+                        out.append(path)
+            return out
 
-        for name in os.listdir(self.base_dir) if os.path.isdir(self.base_dir) else []:
-            path = os.path.join(self.base_dir, name)
-            if name.startswith("staging-"):
-                token = name[len("staging-"):]
-                head, sep, tail = token.rpartition("-p")
-                if sep and tail.isdigit():
-                    token = head  # strip the per-process suffix
-                commit_name = "commit-" + token + ".parquet"
-                if os.path.exists(os.path.join(self.lineage_dir, commit_name)):
-                    self._publish_staging(path)  # roll forward
-                elif now - _newest_mtime(path) > self.stale_staging_sec:
-                    shutil.rmtree(path)
-            elif name.startswith(".commit-") and name.endswith(".tmp"):
-                # commit temp left by a crash mid-write: the real commit
-                # file only ever appears atomically (os.link), so an OLD
-                # tmp is garbage, never a half-commit; a fresh one may
-                # be a live writer about to link it
-                if now - os.path.getmtime(path) > self.stale_staging_sec:
+        doomed = stale(self.chunks_dir, [n for n in _listdir(self.chunks_dir) if n not in listed])
+        if doomed:
+            listed = {f for r in self._catalog() for f in r["files"]}
+        doomed += stale(self.base_dir, [n for n in _listdir(self.base_dir) if n.startswith(".commit-")])
+        removed = []
+        for path in doomed:
+            if os.path.basename(path) not in listed:
+                with contextlib.suppress(FileNotFoundError):
                     os.unlink(path)
-        if not os.path.isdir(self.chunks_dir):
-            return dropped
-        candidates = []
-        for name in os.listdir(self.chunks_dir):
-            if not name.startswith("part_id="):
-                continue
-            tail = name.split("=", 1)[1]
-            if not tail.isdigit():
-                # ".aside-<pid>" leftovers from an interrupted publish
-                # swap: stale-gated like any other crash artifact
-                if ".aside-" in tail and now - os.path.getmtime(
-                    os.path.join(self.chunks_dir, name)
-                ) > self.stale_staging_sec:
-                    shutil.rmtree(os.path.join(self.chunks_dir, name), ignore_errors=True)
-                continue
-            pid = int(tail)
-            if pid not in completed:
-                candidates.append((pid, name))
-        if candidates:
-            completed = completed | self._committed_parts_fs()
-        for pid, name in candidates:
-            if pid in completed:
-                continue
-            shutil.rmtree(os.path.join(self.chunks_dir, name))
-            dropped.append(pid)
-        return dropped
+                    removed.append(os.path.basename(path))
+        return removed
+
+    # -------------------------------------------------- write / commit
+
+    def _write(self, chunks: DataFrame, attempt: int) -> list:
+        """Write each task's chunk rows to one file under ``chunks_dir``
+        (``sink.write_dataset``'s lifecycle: a ``.``-prefixed temp name,
+        ``os.replace``'d on close to a name unique to this snapshot,
+        attempt, driver process and task attempt); returns one manifest
+        row per (file, part_id)."""
+        chunks_dir = self.chunks_dir
+        prefix = f"{self.snapshot_id}-a{attempt}-p{os.getpid()}"
+        os.makedirs(chunks_dir, exist_ok=True)
+
+        def task(batches):
+            from pyspark import TaskContext
+
+            name = f"{prefix}-t{TaskContext.get().taskAttemptId()}.parquet"
+            tmp = os.path.join(chunks_dir, f".{name}.tmp")
+            writer = None
+            totals: dict[int, dict] = defaultdict(lambda: dict.fromkeys(_TOTALS, 0))
+            records: dict[tuple[int, int], int] = {}  # (part, chunk) -> rows
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                if writer is None:
+                    writer = pq.ParquetWriter(tmp, b.schema)
+                writer.write_batch(b)
+                cols = b.select(["part_id", "chunk_id", "num_rows", "encoded_bytes", "plain_bytes"])
+                for part, chunk, rows, enc, plain in zip(*cols.to_pydict().values()):
+                    records[(part, chunk)] = rows  # every column chunk repeats it
+                    t = totals[part]
+                    t["chunk_count"] += 1
+                    t["encoded_bytes"] += enc
+                    t["plain_bytes"] += plain
+            if writer is None:
+                return  # no pending partition reached this task
+            writer.close()
+            os.replace(tmp, os.path.join(chunks_dir, name))
+            for (part, _), rows in records.items():
+                totals[part]["record_count"] += rows
+            yield pa.RecordBatch.from_pylist(
+                [{"file": name, "part_id": p, **t} for p, t in totals.items()],
+                schema=_MANIFEST,
+            )
+
+        return chunks.mapInArrow(task, from_arrow_schema(_MANIFEST)).collect()
+
+    def _commit(self, rows: list[dict], attempt: int) -> None:
+        """Commit ``rows`` atomically as (snapshot, attempt), or raise
+        ConcurrentCommitError and delete this attempt's (unlisted,
+        uniquely named) files."""
+        files = [os.path.join(self.chunks_dir, f) for r in rows for f in r["files"]]
+
+        def lose(msg: str) -> ConcurrentCommitError:
+            for path in files:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(path)
+            return ConcurrentCommitError(msg + "; re-run to resume from the winner's lineage")
+
+        # pre-commit recheck (optimistic concurrency, phase 1): a writer
+        # that committed any of our partitions while we were encoding
+        # wins.  The same-attempt CAS below closes the remaining window
+        # where both writers pass this check.
+        committed = {r["part_id"] for r in self._catalog() if r["snapshot_id"] == self.snapshot_id}
+        overlap = sorted(committed & {r["part_id"] for r in rows})
+        if overlap:
+            raise lose(f"partitions {overlap} were committed by a concurrent writer while this attempt was encoding")
+        # atomic + optimistic-concurrency commit (Iceberg snapshot CAS):
+        # write the full file to a per-process temp path on the same
+        # filesystem, then os.link() it into place — link fails with
+        # FileExistsError if another writer committed this (snapshot,
+        # attempt) first, and a crash mid-write never leaves a truncated
+        # commit file in lineage_dir.  The commit is <= num_parts rows,
+        # so it is a driver-side pyarrow write, not a Spark job.
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        tmp = os.path.join(self.base_dir, f".commit-{self.snapshot_id}-a{attempt}-p{os.getpid()}.tmp")
+        dst = os.path.join(self.lineage_dir, f"commit-{self.snapshot_id}-a{attempt}.parquet")
+        pq.write_table(pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), tmp)
+        try:
+            os.link(tmp, dst)
+        except FileExistsError:
+            raise lose(f"snapshot {self.snapshot_id!r} attempt {attempt} was committed by a concurrent writer ({dst} exists)") from None
+        except FileNotFoundError:  # pragma: no cover - cleaner race
+            raise lose("commit tmp vanished before linking (a concurrent cleaner treated it as stale)") from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
 
     # -------------------------------------------------- run / resume
 
     def run(self, df: DataFrame, only_parts: list[int] | None = None) -> dict:
-        """Encode all not-yet-committed partitions of ``df`` and commit
-        them; idempotent — a second call is a no-op, a call after a
-        partial failure finishes the remainder.
+        """Encode all partitions of ``df`` not yet committed under this
+        ``snapshot_id`` and commit them; idempotent — a second call is a
+        no-op, a call after a partial failure finishes the remainder.
 
         ``only_parts`` restricts the run (used by tests to simulate an
         interrupted job).
 
         The returned dict carries a ``timings`` sub-dict splitting the
-        commit into its phases (encode+stage write, lineage derivation,
-        publish renames, lineage commit) so the write-side cost can be
-        audited separately from encode compute.
+        run into its phases (catalog read + GC, encode + chunk-file
+        write, lineage commit) so the write-side cost can be audited
+        separately from encode compute.
         """
-        spark = df.sparkSession
         timings: dict[str, float] = {}
         t0 = time.time()
-        completed = self.completed_parts(spark)
-        orphans = self._clean_orphans(completed)
+        catalog = self._catalog()
+        mine = [r for r in catalog if r["snapshot_id"] == self.snapshot_id]
+        completed = {r["part_id"] for r in mine}
+        attempt = 1 + max((r["attempt"] for r in mine), default=0)
+        orphans = self._gc({f for r in catalog for f in r["files"]})
         timings["resume_scan_sec"] = round(time.time() - t0, 3)
 
-        keyed = self.with_part(df)
-        pending = keyed
+        pending = self.with_part(df)
         if completed:
             pending = pending.filter(~F.col("_part").isin(*completed))
         if only_parts is not None:
             pending = pending.filter(F.col("_part").isin(*only_parts))
-
-        attempt = 1
-        lin = self.lineage(spark)
-        if lin is not None:
-            prev = lin.agg(F.max("attempt")).collect()[0][0]
-            attempt = int(prev or 0) + 1
-
-        # Iceberg-style snapshot staging: write this attempt's chunks to
-        # a staging dir, derive lineage rows by scanning *only* the
-        # staged files (never the committed store — on a 10^12-file
-        # store a full rescan per resume is the scaling bug), then
-        # publish by renaming part dirs into the chunk store.
         shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
         chunks = encode_dataframe(shuffled, codec=self.codec, chunk_rows=self.chunk_rows, part_col="_part")
-        # per-process staging path: two racers that read the same
-        # catalog compute the SAME attempt number, and a shared staging
-        # dir would let one writer's mode("overwrite") clobber the
-        # other's in-flight staged data before the commit CAS could
-        # arbitrate (round-6 review); the commit file itself remains
-        # keyed on (snapshot, attempt) only
-        staging = os.path.join(
-            self.base_dir, f"staging-{self.snapshot_id}-a{attempt}-p{os.getpid()}"
-        )
         t0 = time.time()
-        chunks.write.mode("overwrite").partitionBy("part_id").parquet(staging)
+        manifest = self._write(chunks, attempt)
+        # key name shared with the perf ledger (perfbench/layers.py)
         timings["encode_and_stage_write_sec"] = round(time.time() - t0, 3)
 
-        staged_parts = [n for n in os.listdir(staging) if n.startswith("part_id=")]
-        if not staged_parts:  # nothing pending: no-op resume
-            shutil.rmtree(staging)
-            return {
-                "committed_partitions": 0,
-                "skipped_partitions": len(completed),
-                "orphans_cleaned": orphans,
-                "attempt": attempt,
-                "timings": timings,
-            }
-        t0 = time.time()
-        written = spark.read.parquet(staging)
-        new_lineage = (
-            written.groupBy("part_id")
-            .agg(
-                F.count("*").alias("chunk_count"),
-                # every column chunk of a (part, chunk) repeats num_rows,
-                # so divide the sum by the column count for true records
-                F.sum("num_rows").alias("record_count_x"),
-                F.countDistinct("column").alias("n_cols"),
-                F.sum("encoded_bytes").alias("encoded_bytes"),
-                F.sum("plain_bytes").alias("plain_bytes"),
-            )
-            .select(
-                F.lit(self.snapshot_id).alias("snapshot_id"),
-                F.col("part_id"),
-                F.col("chunk_count"),
-                (F.col("record_count_x") / F.col("n_cols")).cast("long").alias("record_count"),
-                F.col("encoded_bytes"),
-                F.col("plain_bytes"),
-                F.lit("committed").alias("status"),
-                F.lit(attempt).alias("attempt"),
-                F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")).alias("committed_at"),
-            )
-        )
-        # materialize the (tiny: <= num_parts rows) lineage before the
-        # staged files move out from under the lazy plan
-        lineage_rows = new_lineage.collect()
-        lineage_schema = new_lineage.schema
-        timings["lineage_derive_sec"] = round(time.time() - t0, 3)
-
-        # pre-publish recheck (optimistic concurrency, phase 1): re-read
-        # the catalog — if a concurrent writer committed any of our
-        # staged partitions while we were encoding, abort BEFORE
-        # touching the chunk store so the winner's data dirs are never
-        # clobbered.  The same-attempt CAS below closes the remaining
-        # window where both writers pass this check.
-        latest_committed = self.completed_parts(spark)
-        overlap = sorted(
-            pid
-            for pid in (int(n.split("=", 1)[1]) for n in staged_parts)
-            if pid in latest_committed and pid not in completed
-        )
-        if overlap:
-            shutil.rmtree(staging)
-            raise ConcurrentCommitError(
-                f"partitions {overlap} were committed by a concurrent "
-                f"writer while this attempt was encoding; re-run to "
-                "resume from the winner's lineage"
-            )
-
-        # Commit ORDER (ADVICE r5 rework): claim the snapshot FIRST via
-        # the lineage-file CAS, and only then move part dirs into the
-        # chunk store.  The loser of a race now raises before touching
-        # a single published dir (the r5 order published first, so a
-        # loser could clobber the winner's data dirs and only then fail
-        # the CAS).  A crash between claim and publish leaves the
-        # staging dir + commit file, which _clean_orphans rolls forward
-        # on the next resume — the commit file is the source of truth.
-        t0 = time.time()
-        if lineage_rows:
-            # the commit is <= num_parts metadata rows: write it
-            # driver-side with pyarrow (an Iceberg catalog commit is a
-            # driver/metadata operation, not a Spark job — routing it
-            # through createDataFrame+write cost ~1.9 s of fixed
-            # overhead per commit)
-            import contextlib
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            tbl = pa.Table.from_pylist(
-                [r.asDict() for r in lineage_rows], schema=to_arrow_schema(lineage_schema)
-            )
-            os.makedirs(self.lineage_dir, exist_ok=True)
-            # atomic + optimistic-concurrency commit (Iceberg snapshot
-            # CAS): write the full file to a temp path on the same
-            # filesystem, then os.link() it into place — link fails with
-            # FileExistsError if another writer committed this
-            # (snapshot, attempt) first, so the loser of a race raises
-            # instead of silently clobbering, and a crash mid-write can
-            # never leave a truncated commit file in lineage_dir.
-            tmp = os.path.join(
-                self.base_dir, f".commit-{self.snapshot_id}-a{attempt}.tmp"
-            )
-            dst = os.path.join(
-                self.lineage_dir, f"commit-{self.snapshot_id}-a{attempt}.parquet"
-            )
-            pq.write_table(tbl, tmp)
-            try:
-                os.link(tmp, dst)
-            except FileExistsError:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"snapshot {self.snapshot_id!r} attempt {attempt} was "
-                    f"committed by a concurrent writer ({dst} exists); "
-                    "re-run to resume from the winner's lineage"
-                ) from None
-            except FileNotFoundError:  # pragma: no cover - cleaner race
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    "commit tmp vanished before linking (a concurrent "
-                    "cleaner treated it as stale); re-run to resume"
-                ) from None
-            finally:
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(tmp)
-        timings["lineage_commit_sec"] = round(time.time() - t0, 3)
-        # publish: move the now-committed attempt's part dirs into the
-        # chunk store (roll-forward-safe, see _publish_staging)
-        t0 = time.time()
-        self._publish_staging(staging)
-        timings["publish_rename_sec"] = round(time.time() - t0, 3)
+        # the repartition on _part puts each partition in one task, so
+        # one manifest row (one file) per partition
+        committed_at = time.strftime("%Y-%m-%dT%H:%M:%S")
+        rows = [
+            {"snapshot_id": self.snapshot_id, "part_id": m["part_id"], **{k: m[k] for k in _TOTALS},
+             "status": "committed", "attempt": attempt, "committed_at": committed_at, "files": [m["file"]]}
+            for m in manifest
+        ]
+        if rows:
+            t0 = time.time()
+            self._commit(rows, attempt)
+            timings["lineage_commit_sec"] = round(time.time() - t0, 3)
         return {
-            "committed_partitions": len(lineage_rows),
+            "committed_partitions": len(rows),
             "skipped_partitions": len(completed),
             "orphans_cleaned": orphans,
             "attempt": attempt,
@@ -434,7 +322,23 @@ class EncodeJob:
     # -------------------------------------------------- read back
 
     def chunks(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.chunks_dir)
+        """The committed chunk rows: exactly the files that committed
+        manifests list, across all snapshots.  Every snapshot numbers
+        its chunks from 0 within a part, so the k-th snapshot (in
+        snapshot_id order) has its chunk ids shifted by ``k << 32`` to
+        keep (part_id, chunk_id) — the key decode and pruning group
+        on — unique store-wide."""
+        files: dict[str, set[str]] = defaultdict(set)  # a file may hold several parts
+        for r in self._catalog():
+            files[r["snapshot_id"]].update(os.path.join(self.chunks_dir, f) for f in r["files"])
+        reads = [
+            spark.read.schema(CHUNK_SCHEMA).parquet(*sorted(files[snap]))
+            .withColumn("chunk_id", F.col("chunk_id") + F.lit(k << 32))
+            for k, snap in enumerate(sorted(files))
+        ]
+        if not reads:
+            return spark.createDataFrame([], CHUNK_SCHEMA)
+        return functools.reduce(DataFrame.unionByName, reads)
 
     def decode(self, spark: SparkSession, schema, predicate=None, num_partitions=None) -> DataFrame:
         """Decode the committed store; ``predicate=(column, lo, hi)``

@@ -38,26 +38,34 @@ def apply_malloc_env() -> None:
         pass  # non-glibc platform: env vars for children still apply
 
 
+def spark_conf(cores: int | None = None, shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's standard session settings.  Cores default to
+    ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on; the
+    driver heap to ``$SPARK_DRIVER_MEM``, else a quarter of the host's
+    MemTotal (at most 16g)."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        mem_mb = next(int(line.split()[1]) // 1024 for line in f if line.startswith("MemTotal:"))
+    return {
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cores, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # bigger Arrow batches -> better codec training + fewer UDF crossings
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM") or f"{min(mem_mb // 4, 16 << 10)}m",
+        "spark.sql.shuffle.spill.compress": "true",
+        **{f"spark.executorEnv.{k}": v for k, v in MALLOC_ENV.items()},
+    }
+
+
 def get_spark(
     app_name: str = "cpp-parquet-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     apply_malloc_env()
     builder = SparkSession.builder.appName(app_name)
-    for k, v in MALLOC_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    return (
-        builder
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bigger Arrow batches -> better codec training + fewer UDF crossings
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.sql.shuffle.spill.compress", "true")
-        .getOrCreate()
-    )
+    for k, v in spark_conf(cores, shuffle_partitions).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()

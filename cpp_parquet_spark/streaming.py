@@ -5,9 +5,13 @@ this module gives the engine a streaming front door the Spark-idiomatic
 way: ``readStream`` → ``foreachBatch`` → the same checkpointed
 EncodeJob used for batch, one lineage snapshot per micro-batch.  Spark's
 own streaming checkpoint guarantees each micro-batch is delivered at
-least once; EncodeJob's content-hash partition ids + orphan cleanup
-make re-delivery idempotent, so the combination is effectively
-exactly-once into the chunk store.
+least once, and a re-delivered micro-batch keeps its batch id.  Its
+snapshot id is therefore the same, and EncodeJob's resume skips every
+partition that snapshot already committed, so re-delivery adds no rows;
+files of an attempt that died before its commit are never read.  Given
+a replayable source (the same rows under the same batch id), the
+combination is exactly-once into the chunk store at partition
+granularity.
 
 Also provides a windowed/watermarked stats stream over the ``events``
 table shape (ts, user_id, event_type, amount) as the
@@ -45,7 +49,6 @@ def encode_stream(
             codec=job.codec,
             chunk_rows=job.chunk_rows,
             snapshot_id=f"{job.snapshot_id}-b{batch_id}",
-            salt_target_rows=job.salt_target_rows,
         )
         batch_job.run(batch_df)
 

@@ -8,8 +8,9 @@ Package and submit (north rule: "runs via spark-submit --py-files"):
         examples/submit_encode_job.py <input_parquet_dir> <output_dir> \\
         [num_parts] [snapshot_id]
 
-The job is resumable: re-submitting with the same output_dir skips
-already-committed partitions (lineage anti-join) and finishes the rest.
+The job is resumable: re-submitting with the same output_dir and
+snapshot_id skips the partitions that snapshot already committed and
+finishes the rest.
 """
 
 import sys

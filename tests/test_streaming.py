@@ -10,24 +10,29 @@ from cpp_parquet_spark.streaming import encode_stream, windowed_event_stats
 
 
 def test_streaming_encode_availablenow(spark, tmp_path):
-    # stage the F1 table as files, stream them in, encode each batch
+    # stage the F1 table as several files and stream them in one file
+    # per trigger, so the micro-batches share the store's partitions
     src_dir = str(tmp_path / "src")
     src = source_repos_from_documents(spark, "/root/testdata/sf0.001")
-    src.write.parquet(src_dir)
+    src.repartition(4).write.parquet(src_dir)
 
-    stream = spark.readStream.schema(src.schema).option("maxFilesPerTrigger", 2).parquet(src_dir)
+    stream = spark.readStream.schema(src.schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
     job = EncodeJob(str(tmp_path / "job"), num_parts=4, chunk_rows=4096, snapshot_id="s")
     q = encode_stream(stream, job, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
+    # one lineage snapshot per micro-batch, and more than one batch
+    snaps = {r["snapshot_id"] for r in job.lineage(spark).collect()}
+    assert all(s.startswith("s-b") for s in snaps)
+    assert len(snaps) >= 2
+    # every source row decoded exactly once: equal counts and equal
+    # per-row sha multisets
     decoded = job.decode(spark, src.schema)
     assert decoded.count() == src.count()
     a = src.select(F.sha2("content", 256).alias("s"))
     b = decoded.select(F.sha2("content", 256).alias("s"))
     assert a.exceptAll(b).count() == 0
-    # one lineage snapshot per micro-batch
-    snaps = {r["snapshot_id"] for r in job.lineage(spark).collect()}
-    assert all(s.startswith("s-b") for s in snaps)
+    assert b.exceptAll(a).count() == 0
 
 
 def test_stream_to_real_parquet(spark, tmp_path):
