@@ -23,16 +23,18 @@ from cpp_parquet_spark.kernels import rle
 from cpp_parquet_spark.kernels.bitpack import bit_width_for
 from cpp_parquet_spark.kernels.dictionary import decode_dict, encode_dict
 from cpp_parquet_spark.kernels.fsst import decode_fsst, encode_fsst
+from cpp_parquet_spark.kernels.intpack import decode_delta, decode_for, encode_delta, encode_for
 from cpp_parquet_spark.kernels.levels import ShreddedColumn, unshred
 from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain, plain_size
 from cpp_parquet_spark.kernels.rle_runs import decode_rle_runs, encode_rle_runs
 from cpp_parquet_spark.schema_plan import ColumnPlan
 
-# SGC2: the PLAIN BYTE_ARRAY section changed layout in round 2
-# (interleaved u32 prefixes -> FOR lengths block + contiguous payload).
-# EncodeJob supports cross-run resume, so chunk stores persisted by the
-# old layout must be rejected loudly, not misdecoded — hence the bump.
-MAGIC = b"SGC2"
+# Bumped whenever a codec's byte layout changes (SGC3: the ``for`` and
+# ``delta`` payloads and every length stream became block-wise, see
+# kernels/intpack.py).  EncodeJob supports cross-run resume, so chunk
+# stores persisted by an old layout must be rejected loudly, not
+# misdecoded.
+MAGIC = b"SGC3"
 
 CODECS = ("plain", "dict", "rle", "fsst", "for", "lined", "delta", "alpha", "boolpack")
 _CODEC_ID = {name: i for i, name in enumerate(CODECS)}
@@ -69,13 +71,6 @@ def _encode_values(values: pa.Array, codec: str, physical: str) -> bytes:
         # real Parquet's PLAIN boolean layout
         return np.packbits(np.asarray(values, dtype=bool), bitorder="little").tobytes()
     if codec in ("for", "delta"):
-        from cpp_parquet_spark.kernels.forpack import encode_delta, encode_for
-
-        if pa.types.is_date(values.type):
-            # pyarrow 16 has no date32->int64 cast; go via int32
-            values = values.cast(pa.int32()).cast(pa.int64())
-        elif pa.types.is_timestamp(values.type):
-            values = values.cast(pa.int64())
         return encode_for(values) if codec == "for" else encode_delta(values)
     raise ValueError(f"unknown codec {codec}")
 
@@ -101,10 +96,9 @@ def _decode_values(buf: bytes, n: int, codec: str, physical: str, arrow_type: pa
         bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n, bitorder="little")
         return pa.array(bits.astype(bool), type=arrow_type)
     if codec in ("for", "delta"):
-        from cpp_parquet_spark.kernels.forpack import decode_delta, decode_for
-
         arr = decode_for(buf, n) if codec == "for" else decode_delta(buf, n)
-        out = pa.array(arr)
+        # unsigned values come back as their two's-complement bit pattern
+        out = pa.array(arr.view(np.uint64) if pa.types.is_unsigned_integer(arrow_type) else arr)
         if pa.types.is_date(arrow_type):  # no int64->date32 cast in pyarrow 16
             return out.cast(pa.int32()).cast(arrow_type)
         return out.cast(arrow_type)
@@ -166,7 +160,7 @@ def deserialize_chunk(buf: bytes, plan: ColumnPlan) -> ShreddedColumn:
         if bytes(mv[0:3]) == MAGIC[:3]:  # an SGC chunk from another layout version
             raise ValueError(
                 f"chunk format {bytes(mv[0:4])!r} does not match this build's {MAGIC!r}; "
-                "re-encode the store (the PLAIN BYTE_ARRAY layout changed)"
+                "re-encode the store (a codec's byte layout changed)"
             )
         raise ValueError("bad chunk magic")
     codec = CODECS[mv[5]]

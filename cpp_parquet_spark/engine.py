@@ -643,9 +643,12 @@ def partition_for_encoding(
         # collected even when the stats overestimate
         collect_floor = min(max(4 << 20, plan_bytes // max(num * 4, 1)), 2 << 30)
         gid_all = (1 << len(keys)) - 1
+        # roll up the keys' Spark string casts: the salt map below is
+        # looked up by the same cast, and Python's str() spells booleans
+        # and doubles differently (True vs true, 1e+20 vs 1.0E20)
         agg_rows = (
             df.sample(fraction=frac, seed=42)
-            .rollup(*keys)
+            .rollup(*[F.col(k).cast("string").alias(k) for k in keys])
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(_row_bytes_expr(df)).alias("b"),
@@ -677,7 +680,7 @@ def partition_for_encoding(
             if salt_n > 1:
                 skewed.append(
                     (
-                        tuple("\x00<NULL>" if r[k] is None else str(r[k]) for k in keys),
+                        tuple("\x00<NULL>" if r[k] is None else r[k] for k in keys),
                         salt_n,
                     )
                 )

@@ -20,7 +20,7 @@ import numpy as np
 import pyarrow as pa
 
 from cpp_parquet_spark.kernels.bitpack import bit_width_for, pack_bits, unpack_bits
-from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
+from cpp_parquet_spark.kernels.intpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import _byte_components
 
 MAX_ALPHABET = 16

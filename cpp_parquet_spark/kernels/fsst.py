@@ -36,7 +36,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
+from cpp_parquet_spark.kernels.intpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import _byte_components
 
 _ESCAPE = 255

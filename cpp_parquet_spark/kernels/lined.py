@@ -24,7 +24,7 @@ import numpy as np
 import pyarrow as pa
 
 from cpp_parquet_spark.kernels.bitpack import bit_width_for
-from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
+from cpp_parquet_spark.kernels.intpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import _byte_components, decode_plain, encode_plain
 from cpp_parquet_spark.kernels.rle import decode_hybrid, encode_hybrid
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from cpp_parquet_spark.kernels.intpack import decode_for, encode_for
+
 _FIXED_NP = {
     "INT32": np.dtype("<i4"),
     "INT64": np.dtype("<i8"),
@@ -86,8 +88,6 @@ def encode_plain(values: pa.Array, physical: str) -> bytes:
         return _values_np(values, physical).tobytes() if n else b""
     if n == 0:
         return b""
-    from cpp_parquet_spark.kernels.forpack import encode_for
-
     lengths, payload = _byte_components(values)
     len_blob = encode_for(lengths)
     out = bytearray(len(len_blob).to_bytes(4, "little"))
@@ -115,8 +115,6 @@ def decode_plain(buf: bytes, n: int, physical: str, arrow_type: pa.DataType) -> 
         return pa.array(arr, type=arrow_type)
     if n == 0:
         return pa.array([], type=arrow_type)
-    from cpp_parquet_spark.kernels.forpack import decode_for
-
     mv = memoryview(buf)
     ll = int.from_bytes(mv[0:4], "little")
     lengths = decode_for(bytes(mv[4 : 4 + ll]), n)

@@ -15,7 +15,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
+from cpp_parquet_spark.kernels.intpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain
 
 

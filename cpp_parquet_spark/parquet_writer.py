@@ -43,8 +43,9 @@ import pyarrow as pa
 from cpp_parquet_spark import thrift_compact as tc
 from cpp_parquet_spark.kernels import rle
 from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.intpack import encode_delta
 from cpp_parquet_spark.kernels.levels import ShreddedColumn, shred
-from cpp_parquet_spark.kernels.plain import encode_plain_parquet
+from cpp_parquet_spark.kernels.plain import _byte_components, encode_plain_parquet
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
 
 MAGIC = b"PAR1"
@@ -260,9 +261,10 @@ _CODEC_GZIP = 2
 
 
 def _delta_length_byte_array(values: pa.Array) -> bytes:
-    from cpp_parquet_spark.kernels.deltabp import encode_delta_length_byte_array
-
-    return encode_delta_length_byte_array(values)
+    """DELTA_LENGTH_BYTE_ARRAY: the DELTA_BINARY_PACKED lengths, then
+    the concatenated value bytes with no per-value prefixes."""
+    lengths, payload = _byte_components(values)
+    return encode_delta(lengths) + payload.tobytes()
 
 
 def _gzip(data: bytes) -> bytes:
@@ -306,9 +308,7 @@ def _page_values(sh: ShreddedColumn, plan: ColumnPlan, encoding: int, int96: boo
     if encoding == _ENC_DELTA_LENGTH_BA:
         return _delta_length_byte_array(sh.values)
     if encoding == _ENC_DELTA_BP:
-        from cpp_parquet_spark.kernels.deltabp import encode_delta_binary_packed_array
-
-        return encode_delta_binary_packed_array(sh.values)
+        return encode_delta(sh.values)
     return _page_values_plain(sh.values, plan.physical, int96=int96)
 
 
@@ -634,27 +634,23 @@ class ParquetWriter:
                 elif self.use_delta and not use_int96 and plan.physical in ("INT32", "INT64"):
                     # DELTA_BINARY_PACKED for signed int / temporal
                     # chunks when it actually beats PLAIN (spec
-                    # Encodings.md; unsigned columns stay PLAIN — their
-                    # raw bit patterns don't fit signed delta space)
-                    from cpp_parquet_spark.kernels.deltabp import (
-                        delta_bp_fits,
-                        encode_delta_binary_packed_array,
-                    )
-
+                    # Encodings.md; unsigned columns stay PLAIN: their
+                    # values widen to int64, not to the physical type's
+                    # two's-complement pattern an INT32 reader rebuilds)
                     vt2 = sh.values.type
                     signed_like = (
                         pa.types.is_signed_integer(vt2)
                         or pa.types.is_timestamp(vt2)
                         or pa.types.is_date32(vt2)
                     )
-                    if signed_like and len(sh.values) and delta_bp_fits(sh.values):
+                    if signed_like and len(sh.values):
                         # decide on a bounded contiguous sample: trial-
                         # encoding the whole chunk doubled the encode
                         # cost of every delta column (pages re-encode
                         # the same values right below)
                         sample = sh.values.slice(0, min(len(sh.values), 8192))
                         plain_bytes = len(sample) * (4 if plan.physical == "INT32" else 8)
-                        if len(encode_delta_binary_packed_array(sample)) < 0.9 * plain_bytes:
+                        if len(encode_delta(sample)) < 0.9 * plain_bytes:
                             enc = _ENC_DELTA_BP
                             encodings = [_ENC_DELTA_BP, _ENC_RLE]
                 data_offset = self._pos

@@ -46,6 +46,45 @@ def test_chunk_roundtrip_for():
     assert meta.encoded_bytes < meta.plain_bytes / 3
 
 
+@pytest.mark.parametrize("codec", ["for", "delta"])
+def test_chunk_int_codecs_full_range(codec):
+    """for/delta chunks round-trip every 64-bit pattern: int64 extremes,
+    uint64 values past 2^63, and dates as their raw integers."""
+    import datetime as dt
+
+    _chunk_rt(pa.field("i", pa.int64(), nullable=True), [2**63 - 1, None, -(2**63), 0, -1] * 300, codec)
+    _chunk_rt(pa.field("u", pa.uint64(), nullable=False), [2**64 - 1, 0, 2**63 + 7, 5] * 300, codec)
+    days = [dt.date(1970, 1, 1) + dt.timedelta(days=37 * i) for i in range(2000)]
+    _chunk_rt(pa.field("d", pa.date32(), nullable=False), days, codec)
+
+
+@pytest.mark.parametrize("codec", ["for", "delta"])
+@pytest.mark.parametrize(
+    "field, data",
+    [
+        (pa.field("f8", pa.float64(), nullable=False), [0.1, -2.5, 1e300, 7.0] * 300),
+        (pa.field("f4", pa.float32(), nullable=False), [0.1, -2.5, 1e30, 7.0] * 300),
+        (pa.field("b", pa.bool_(), nullable=False), [True, False, False] * 300),
+    ],
+    ids=["float64", "float32", "bool"],
+)
+def test_int_codecs_reject_non_integers(codec, field, data):
+    """for/delta refuse a float or boolean column rather than pack its
+    bit patterns into a chunk that cannot be decoded back."""
+    plan = plan_from_schema(pa.schema([field]))[0]
+    with pytest.raises(TypeError, match="needs integers"):
+        serialize_chunk(shred(pa.array(data, type=field.type), plan), codec)
+
+
+def test_old_chunk_format_rejected():
+    """A chunk written by the SGC2 layout is refused, not misdecoded."""
+    field = pa.field("n", pa.int64(), nullable=False)
+    blob, _ = _chunk_rt(field, list(range(1000)), "for")
+    plan = plan_from_schema(pa.schema([field]))[0]
+    with pytest.raises(ValueError, match="does not match this build"):
+        deserialize_chunk(b"SGC2" + blob[4:], plan)
+
+
 def test_chunk_repeated_column():
     f = pa.field("arr", pa.list_(pa.field("element", pa.int32(), nullable=False)), nullable=False)
     _chunk_rt(f, [[1, 2, 3], [4], [5, 6]] * 30, "plain")

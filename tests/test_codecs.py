@@ -7,9 +7,19 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from cpp_parquet_spark.kernels.bitpack import encode_vlq, pack_bits
 from cpp_parquet_spark.kernels.dictionary import decode_dict, encode_dict
-from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.fsst import decode_fsst, encode_fsst
+from cpp_parquet_spark.kernels.intpack import (
+    BLOCK,
+    MINI,
+    MINIBLOCKS,
+    decode_blocks,
+    decode_delta,
+    decode_for,
+    encode_delta,
+    encode_for,
+)
 from cpp_parquet_spark.kernels.plain import (
     decode_plain,
     encode_plain,
@@ -76,7 +86,8 @@ def test_for_roundtrip():
 def test_for_constant():
     v = np.full(10000, -42, dtype=np.int64)
     enc = encode_for(v)
-    assert len(enc) == 9  # min + width byte, zero-width payload
+    # per block: a 1-byte zigzag min and 8 zero widths, no payload
+    assert len(enc) == 9 * -(-10000 // BLOCK)
     np.testing.assert_array_equal(decode_for(enc, 10000), v)
 
 
@@ -84,6 +95,78 @@ def test_for_negative_range():
     v = np.array([-(2**62), 2**62], dtype=np.int64)
     enc = encode_for(v)
     np.testing.assert_array_equal(decode_for(enc, 2), v)
+
+
+@given(st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=200))
+@settings(max_examples=50, deadline=None)
+def test_for_property(vals):
+    v = np.array(vals, dtype=np.int64)
+    np.testing.assert_array_equal(decode_for(encode_for(v), len(v)), v)
+
+
+@given(st.lists(st.integers(-(2**62), 2**62), min_size=1, max_size=300))
+@settings(max_examples=60, deadline=None)
+def test_delta_property(vals):
+    v = np.array(vals, dtype=np.int64)
+    np.testing.assert_array_equal(decode_delta(encode_delta(v), len(v)), v)
+
+
+_I64 = np.iinfo(np.int64)
+
+
+def _reference_body(x):
+    """The DELTA_BINARY_PACKED block body as the spec words it, one block
+    at a time in Python ints: the reference intpack must match."""
+    out = bytearray()
+    for s in range(0, len(x), BLOCK):
+        blk = [int(v) for v in x[s : s + BLOCK]]
+        lo = min(blk)
+        adj = [v - lo for v in blk] + [0] * (BLOCK - len(blk))
+        minis = [adj[m : m + MINI] for m in range(0, BLOCK, MINI)]
+        widths = [max(mb).bit_length() for mb in minis]
+        out += encode_vlq((lo << 1) ^ (lo >> 63)) + bytes(widths)
+        for w, mb in zip(widths, minis):
+            out += pack_bits(np.array(mb, np.uint64), w)
+    return bytes(out)
+
+
+@given(
+    n=st.sampled_from([0, 1, 5, MINI + 1, BLOCK - 1, BLOCK, BLOCK + 1, 3 * BLOCK + 5]),
+    shape=st.sampled_from(["full", "extremes", "clustered", "walk", "widths"]),
+    seed=st.integers(0, 2**32 - 1),
+    head=st.lists(st.integers(_I64.min, _I64.max), max_size=8),
+)
+@settings(max_examples=120, deadline=None)
+def test_intpack_roundtrip(n, shape, seed, head):
+    """``for`` and ``delta`` round-trip every int64 (full range, min/max
+    jumps whose diffs wrap, per-block clusters, walks that wrap past the
+    int64 limits, a width per miniblock) at lengths within one miniblock,
+    one block and several blocks, and their bytes are
+    the spec's: ``delta`` the whole DBP page body, ``for`` the block body
+    less its trailing zero padding."""
+    rng = np.random.default_rng(seed)
+    if shape == "full":
+        v = rng.integers(_I64.min, _I64.max, n, dtype=np.int64, endpoint=True)
+    elif shape == "extremes":
+        v = rng.choice(np.array([_I64.min, _I64.max, 0, -1], dtype=np.int64), n)
+    elif shape == "clustered":
+        v = rng.integers(-(2**40), 2**40, n) + np.repeat(rng.integers(_I64.min // 2, _I64.max // 2, 4), BLOCK)[:n]
+    elif shape == "walk":
+        v = np.cumsum(rng.integers(0, 2**56, n, dtype=np.int64)) + _I64.max - 2**60
+    else:  # a different bit width in every miniblock
+        v = rng.integers(0, 2 ** np.repeat(rng.integers(0, 63, n // MINI + 1), MINI)[:n], dtype=np.int64)
+    v[: len(head)] = head[:n]
+    for encode, decode in ((encode_for, decode_for), (encode_delta, decode_delta)):
+        out = decode(encode(v), n)
+        assert out.dtype == np.int64
+        np.testing.assert_array_equal(out, v)
+    first = int(v[0]) if n else 0
+    head = encode_vlq(BLOCK) + encode_vlq(MINIBLOCKS) + encode_vlq(n) + encode_vlq((first << 1) ^ (first >> 63))
+    assert encode_delta(v) == head + _reference_body(np.diff(v))
+    body = _reference_body(v)
+    enc = encode_for(v)
+    assert body.startswith(enc) and not body[len(enc) :].strip(b"\0")
+    np.testing.assert_array_equal(decode_blocks(body + b"tail", 0, n), v)
 
 
 def test_dict_strings():
@@ -167,13 +250,6 @@ def test_fsst_property(vals):
     fsst_rt(vals, pa.binary())
 
 
-@given(st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=200))
-@settings(max_examples=50, deadline=None)
-def test_for_property(vals):
-    v = np.array(vals, dtype=np.int64)
-    np.testing.assert_array_equal(decode_for(encode_for(v), len(v)), v)
-
-
 @given(st.lists(st.sampled_from(["aa", "bb", "cc", ""]), max_size=120))
 @settings(max_examples=40, deadline=None)
 def test_dict_rle_property(vals):
@@ -229,21 +305,10 @@ def test_selector_unique_lines_picks_fsst():
 
 
 def test_delta_monotone_ids():
-    from cpp_parquet_spark.kernels.forpack import decode_delta, encode_delta
-
     v = np.arange(1_000_000, 1_050_000, dtype=np.int64)
     enc = encode_delta(v)
     np.testing.assert_array_equal(decode_delta(enc, len(v)), v)
     assert len(enc) < len(v) // 2  # near-zero bits per value
-
-
-@given(st.lists(st.integers(-(2**62), 2**62), min_size=1, max_size=300))
-@settings(max_examples=60, deadline=None)
-def test_delta_property(vals):
-    from cpp_parquet_spark.kernels.forpack import decode_delta, encode_delta
-
-    v = np.array(vals, dtype=np.int64)
-    np.testing.assert_array_equal(decode_delta(encode_delta(v), len(v)), v)
 
 
 def test_selector_monotone_picks_delta():

@@ -73,6 +73,20 @@ def test_nulls_roundtrip(spark):
     _roundtrip_check(df, ["id"])
 
 
+@pytest.mark.parametrize("codec", ["for", "delta"])
+def test_forced_int_codec_float_column_falls_back_to_plain(spark, codec):
+    """A forced ``for``/``delta`` encodes the integer column with it and
+    the DOUBLE column with PLAIN, and both decode exactly."""
+    df = spark.createDataFrame(
+        [(i, None if i % 5 == 0 else i * 0.37 - 9.5e19 * (i % 3)) for i in range(2000)],
+        "id bigint, price double",
+    )
+    chunks = encode_dataframe(df, codec=codec).cache()
+    used = {r["column"]: r["codec"] for r in chunks.select("column", "codec").distinct().collect()}
+    assert used == {"id": codec, "price": "plain"}
+    assert sorted(decode_dataframe(chunks, df.schema).collect()) == sorted(df.collect())
+
+
 def test_encode_pipeline_partitions_and_salts(spark, sf_small):
     src = source_repos_from_documents(spark, sf_small)
     chunks = encode_pipeline(src, num_partitions=4).cache()
@@ -81,19 +95,29 @@ def test_encode_pipeline_partitions_and_salts(spark, sf_small):
     assert decoded.count() == src.count()
 
 
-def test_partition_for_encoding_salting(spark):
-    # skewed synthetic input: repo 0 owns ~30% of rows
-    df = synthetic_source_repos(spark, 20000, parts=4)
-    out = partition_for_encoding(df, num_partitions=8, target_rows=2000)
-    # the skewed (lang, repo) keys must be split across >1 partition
+@pytest.mark.parametrize("key", ["repo", "bool", "double"])
+def test_partition_for_encoding_salting(spark, key):
+    """Skewed keys are split across partitions whatever their type: the
+    salt map is keyed by Spark's string cast (``true``, ``1.0E20``), the
+    same text the lookup builds, not Python's ``True`` / ``1e+20``."""
+    if key == "repo":
+        # skewed synthetic input: repo 0 owns ~30% of rows
+        df = synthetic_source_repos(spark, 20000, parts=4)
+        out = partition_for_encoding(df, num_partitions=8, target_rows=2000)
+    else:
+        hot = F.col("id") % 10 != 0  # one key value owns 90% of rows
+        k = hot if key == "bool" else F.when(hot, F.lit(1e20)).otherwise(F.col("id").cast("double"))
+        df = spark.range(20000).select(k.alias(key), F.sha2(F.col("id").cast("string"), 256).alias("payload"))
+        out = partition_for_encoding(df, keys=(key,), num_partitions=8, target_rows=2000)
+    # the skewed keys must be split across >1 partition
     parts_per_key = (
         out.withColumn("pid", F.spark_partition_id())
-        .groupBy("repo")
+        .groupBy(key)
         .agg(F.countDistinct("pid").alias("nparts"), F.count("*").alias("cnt"))
         .filter(F.col("cnt") > 4000)
         .collect()
     )
-    assert all(r["nparts"] > 1 for r in parts_per_key), parts_per_key
+    assert parts_per_key and all(r["nparts"] > 1 for r in parts_per_key), parts_per_key
 
 
 def test_synthetic_deterministic(spark):

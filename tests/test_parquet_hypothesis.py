@@ -114,23 +114,25 @@ def test_random_tables_roundtrip_v2_pages(t, rg, gzip, use_dict, tmp_path_factor
 
 @settings(max_examples=25, deadline=None)
 @given(
-    vals=st.lists(
-        st.one_of(st.none(), st.integers(min_value=-(2**62) + 1, max_value=2**62 - 1)),
-        max_size=300,
-    ),
+    vals=st.lists(_int64, max_size=300),
+    tail=st.sampled_from([0, 1023, 1024, 1025]),
     v2=st.booleans(),
 )
-def test_random_ints_delta_binary_packed(vals, v2, tmp_path_factory):
-    """Random nullable int64 columns through the DELTA_BINARY_PACKED
-    eligibility gate (delta or PLAIN, whichever the size heuristic
-    picks) read back exactly — covers block/miniblock boundary cases."""
+def test_random_ints_delta_binary_packed(vals, tail, v2, tmp_path_factory):
+    """Random nullable full-range int64 columns through the
+    DELTA_BINARY_PACKED eligibility gate (delta or PLAIN, whichever the
+    size heuristic picks) read back exactly — covers wrapping diffs and
+    miniblock/block boundary cases."""
+    vals = vals + [i * 7919 - 3_000_000 for i in range(tail)]  # a cheap-delta tail
     t = pa.table({"v": pa.array(vals, pa.int64())})
-    path = str(tmp_path_factory.mktemp("dbp") / "t.parquet")
-    write_table(
-        t,
-        path,
-        use_dictionary=False,
-        data_page_version=2 if v2 else 1,
-        page_records=129,  # straddle the 128-value delta block size
-    )
-    assert pq.read_table(path).column("v").to_pylist() == vals
+    # straddle the 128-value miniblock, then the 1024-value block
+    for page_records in (129, 1025):
+        path = str(tmp_path_factory.mktemp("dbp") / "t.parquet")
+        write_table(
+            t,
+            path,
+            use_dictionary=False,
+            data_page_version=2 if v2 else 1,
+            page_records=page_records,
+        )
+        assert pq.read_table(path).column("v").to_pylist() == vals

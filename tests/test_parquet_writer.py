@@ -414,6 +414,55 @@ def test_delta_binary_packed_int_pages(tmp_path):
     assert os.path.getsize(p_delta) < os.path.getsize(p_plain)
 
 
+def test_delta_binary_packed_cross_reader(tmp_path, monkeypatch):
+    """The writer's DELTA_BINARY_PACKED pages decode to the same values
+    through intpack.decode_delta, pyarrow and DuckDB: pages straddle the
+    1024-value block, nulls skip values, and an int64 walk past the
+    maximum wraps its diffs."""
+    import numpy as np
+
+    from cpp_parquet_spark import parquet_writer
+    from cpp_parquet_spark.kernels.intpack import BLOCK, as_int64, decode_delta
+
+    bodies = {}
+    page_values = parquet_writer._page_values
+
+    def spy(sh, plan, encoding, int96):
+        body = page_values(sh, plan, encoding, int96)
+        if encoding == parquet_writer._ENC_DELTA_BP:
+            bodies.setdefault(plan.dotted, []).append((as_int64(sh.values), body))
+        return body
+
+    monkeypatch.setattr(parquet_writer, "_page_values", spy)
+    n = 3 * BLOCK + 7
+    rng = np.random.default_rng(7)
+    walk = np.cumsum(rng.integers(0, 50, n)) + (np.iinfo(np.int64).max - 12 * n)
+    t = pa.table(
+        {
+            "id": pa.array(walk, pa.int64(), mask=np.arange(n) % 13 == 0),
+            "small": pa.array(np.sort(rng.integers(-(2**31), 2**31, n)), pa.int32()),
+            "ts": pa.array(np.cumsum(rng.integers(0, 10**6, n)) + 1_700_000_000_000_000, pa.timestamp("us")),
+        }
+    )
+    assert walk.min() < 0 < walk.max()  # the walk wrapped
+    path = str(tmp_path / "dbp.parquet")
+    write_table(t, path, use_dictionary=False, use_delta=True, page_records=BLOCK + 1)
+    with open(path, "rb") as f:
+        raw = f.read()
+    back = pq.read_table(path)
+    rows = duckdb.sql(f"select * from read_parquet('{path}', file_row_number=true) order by file_row_number").fetchall()
+    for i, name in enumerate(t.schema.names):
+        assert len(bodies[name]) == 4, name
+        ours = []
+        for values, body in bodies[name]:
+            assert body in raw
+            ours += decode_delta(body, len(values)).tolist()
+        want = t.column(name).drop_null()
+        assert ours == as_int64(want.combine_chunks()).tolist(), name
+        assert back.column(name).to_pylist() == t.column(name).to_pylist(), name
+        assert [r[i] for r in rows] == t.column(name).to_pylist(), name
+
+
 def test_delta_binary_packed_nulls_and_pages(tmp_path):
     """DELTA_BINARY_PACKED composes with def levels (nulls) and
     multi-page chunks."""
