@@ -90,16 +90,30 @@ def _q_roundtrip_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_roundtrip_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-style aggregation computed on *decoded* lineitem — proves
-    numeric/timestamp fidelity through the codecs."""
+    numeric/timestamp fidelity through the codecs.
+
+    The sums are exact DECIMAL sums, so the result does not depend on
+    partitioning or summation order (a double sum flipped the rounded
+    cent with the task count).  Every lineitem double is a cent value
+    that CAST(... AS DECIMAL(15,2)) recovers exactly, in Spark and in
+    DuckDB alike; the rounded exact sum is cast back to DOUBLE, the
+    nearest double in both engines."""
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     dec = _roundtrip(df)
+
+    def cents(c: str):
+        return F.col(c).cast("decimal(15,2)")
+
+    def total(e):
+        return F.round(F.sum(e), 2).cast("double")
+
     return (
         dec.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+            total(cents("l_quantity")).alias("sum_qty"),
+            total(cents("l_extendedprice")).alias("sum_base_price"),
+            total(cents("l_extendedprice") * (1 - cents("l_discount"))).alias("sum_disc_price"),
             F.count("*").alias("count_order"),
         )
     )
@@ -749,9 +763,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "roundtrip_lineitem_agg": """
             SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   CAST(round(sum(CAST(l_quantity AS DECIMAL(15,2))), 2) AS DOUBLE) AS sum_qty,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))), 2) AS DOUBLE) AS sum_base_price,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                                  * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS sum_disc_price,
                    count(*) AS count_order
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -919,7 +934,7 @@ def oracle_sql() -> dict[str, str]:
         "similarity_topk": """
             WITH v AS (
               SELECT vec_id,
-                     list_transform(embedding, x -> CAST(round(x * 1000) AS BIGINT)) AS iv
+                     list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS iv
               FROM embeddings
             ),
             q AS (SELECT vec_id AS qid, iv AS qv FROM v WHERE vec_id % 50 = 0),
@@ -999,7 +1014,7 @@ def oracle_sql() -> dict[str, str]:
         "similarity_ivf_topk": """
             WITH v AS (
               SELECT vec_id,
-                     list_transform(embedding, x -> CAST(round(x * 1000) AS BIGINT)) AS iv
+                     list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS iv
               FROM embeddings WHERE vec_id % 50 = 0
             )
             SELECT vec_id AS qid,
@@ -1024,7 +1039,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_near_dup_lsh": """
             WITH v AS (
               SELECT vec_id,
-                     list_transform(embedding, x -> CAST(round(x * 1000) AS BIGINT)) AS iv
+                     list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS iv
               FROM embeddings WHERE vec_id % 25 = 0
             )
             SELECT vec_id AS id_a,
@@ -1094,7 +1109,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             v AS (
               SELECT vec_id,
-                     list_transform(embedding, x -> CAST(round(x * 1000) AS BIGINT)) AS iv
+                     list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS iv
               FROM all_emb
             )
             SELECT id_a, id_b, cosine FROM (

@@ -27,12 +27,13 @@ Scale notes (designed for ~100 TB / 1000 executors, tested local[32]):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
+from cpp_parquet_spark.session import drop_runtime_zip_finders
 
 CHUNK_SCHEMA = StructType(
     [
@@ -64,32 +66,12 @@ CHUNK_SCHEMA = StructType(
     ]
 )
 
-_CHUNK_ARROW = pa.schema(
-    [
-        ("part_id", pa.int32()),
-        ("chunk_id", pa.int64()),
-        ("column", pa.string()),
-        ("codec", pa.string()),
-        ("physical", pa.string()),
-        ("num_rows", pa.int64()),
-        ("num_entries", pa.int64()),
-        ("num_values", pa.int64()),
-        ("plain_bytes", pa.int64()),
-        ("plain_value_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()),
-        ("encode_ms", pa.int64()),
-        ("stat_min", pa.binary()),
-        ("stat_max", pa.binary()),
-        ("payload", pa.binary()),
-    ]
-)
+_CHUNK_ARROW = to_arrow_schema(CHUNK_SCHEMA)
 
 DEFAULT_CHUNK_ROWS = 1 << 16
 
 
 def _arrow_schema_for(df: DataFrame) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     return to_arrow_schema(df.schema)
 
 
@@ -238,13 +220,30 @@ def encode_dataframe(
     codec memo so the first chunk skips trial-encode selection; the
     drift guard and periodic refresh keep the choice adaptive.
     """
-    data_fields = [f for f in _arrow_schema_for(df) if f.name != part_col]
+    encode = chunk_encoder(_arrow_schema_for(df), codec, chunk_rows, part_col, codec_hints)
+    return df.mapInArrow(encode, CHUNK_SCHEMA)
+
+
+def chunk_encoder(
+    schema: pa.Schema,
+    codec: str = "auto",
+    chunk_rows: int = DEFAULT_CHUNK_ROWS,
+    part_col: str | None = None,
+    codec_hints: dict[str, str] | None = None,
+) -> Callable[[Iterable[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The task-side generator of :func:`encode_dataframe`: input
+    batches of ``schema`` in, CHUNK_SCHEMA batches (one per chunk) out.
+    A task that consumes chunks itself (``lineage.EncodeJob``'s file
+    writer) runs it in its own UDF, so the payloads never leave that
+    Python worker."""
+    data_fields = [f for f in schema if f.name != part_col]
     plans = plan_from_schema(pa.schema(data_fields))
 
     def encode_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
         from pyspark import TaskContext
 
+        drop_runtime_zip_finders()
         ctx = TaskContext.get()
         task_part = ctx.partitionId() if ctx is not None else 0
 
@@ -297,7 +296,7 @@ def encode_dataframe(
         if pending_rows:
             yield flush()
 
-    return df.mapInArrow(encode_batches, CHUNK_SCHEMA)
+    return encode_batches
 
 
 def _merge_columns(field: pa.Field, cols: list[pa.Array]) -> pa.Array:
@@ -399,8 +398,6 @@ def decode_dataframe(
     measured 0.52-0.63 s vs 0.66-1.15 s.  Guide §2.2/§2.5: size
     partitions for the *decoded* side).
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     arrow_schema = to_arrow_schema(schema)
     plans = plan_from_schema(arrow_schema)
 
@@ -431,6 +428,8 @@ def decode_dataframe(
 
     def decode_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from cpp_parquet_spark.chunk import decode_chunk_to_column
+
+        drop_runtime_zip_finders()
 
         current: tuple | None = None
         payloads: dict[str, bytes] = {}
@@ -516,7 +515,6 @@ def _prune_condition(chunks: DataFrame, schema: StructType, column: str, lower=N
     no bound is set (nothing to prune).  Semantics documented on
     :func:`prune_chunks`."""
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from cpp_parquet_spark.stats import order_key
 
@@ -646,7 +644,7 @@ def partition_for_encoding(
         # roll up the keys' Spark string casts: the salt map below is
         # looked up by the same cast, and Python's str() spells booleans
         # and doubles differently (True vs true, 1e+20 vs 1.0E20)
-        agg_rows = (
+        sampled = (
             df.sample(fraction=frac, seed=42)
             .rollup(*[F.col(k).cast("string").alias(k) for k in keys])
             .agg(
@@ -664,8 +662,14 @@ def partition_for_encoding(
                     )
                 )
             )
-            .collect()
         )
+        if not plan_bytes:
+            # no size estimate: the floor alone would collect every key
+            # above ~2 KB of sampled bytes.  Keep the total row and the
+            # top 2 * num keys by sampled bytes instead (one job still):
+            # at most num keys can exceed a budget of total / num.
+            sampled = sampled.orderBy(F.desc("gid"), F.desc("b")).limit(1 + 2 * num)
+        agg_rows = sampled.collect()
         total_bytes_est = next(
             (int((r["b"] or 0) / frac) for r in agg_rows if r["gid"] == gid_all), 0
         )

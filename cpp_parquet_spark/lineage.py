@@ -34,9 +34,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from cpp_parquet_spark.engine import CHUNK_SCHEMA, DEFAULT_CHUNK_ROWS, decode_dataframe, encode_dataframe
+from cpp_parquet_spark.engine import CHUNK_SCHEMA, DEFAULT_CHUNK_ROWS, chunk_encoder, decode_dataframe
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -178,15 +178,23 @@ class EncodeJob:
 
     # -------------------------------------------------- write / commit
 
-    def _write(self, chunks: DataFrame, attempt: int) -> list:
-        """Write each task's chunk rows to one file under ``chunks_dir``
-        (``sink.write_dataset``'s lifecycle: a ``.``-prefixed temp name,
+    def _write(self, pending: DataFrame, attempt: int) -> DataFrame:
+        """The store write, one Python map per task: shuffle ``pending``
+        by ``_part``, run the engine's chunk encoder and write its chunk
+        rows to one file under ``chunks_dir`` in the same UDF, so the
+        payloads never go back through the JVM (the encoder also runs
+        ``session.drop_runtime_zip_finders`` first).  The file follows
+        ``sink.write_dataset``'s lifecycle: a ``.``-prefixed temp name,
         ``os.replace``'d on close to a name unique to this snapshot,
-        attempt, driver process and task attempt); returns one manifest
-        row per (file, part_id)."""
+        attempt, driver process and task attempt.  Returns the lazy
+        manifest: one row per (file, part_id)."""
         chunks_dir = self.chunks_dir
         prefix = f"{self.snapshot_id}-a{attempt}-p{os.getpid()}"
         os.makedirs(chunks_dir, exist_ok=True)
+        shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
+        encode = chunk_encoder(
+            to_arrow_schema(shuffled.schema), codec=self.codec, chunk_rows=self.chunk_rows, part_col="_part"
+        )
 
         def task(batches):
             from pyspark import TaskContext
@@ -196,9 +204,7 @@ class EncodeJob:
             writer = None
             totals: dict[int, dict] = defaultdict(lambda: dict.fromkeys(_TOTALS, 0))
             records: dict[tuple[int, int], int] = {}  # (part, chunk) -> rows
-            for b in batches:
-                if not b.num_rows:
-                    continue
+            for b in encode(batches):
                 if writer is None:
                     writer = pq.ParquetWriter(tmp, b.schema)
                 writer.write_batch(b)
@@ -220,7 +226,7 @@ class EncodeJob:
                 schema=_MANIFEST,
             )
 
-        return chunks.mapInArrow(task, from_arrow_schema(_MANIFEST)).collect()
+        return shuffled.mapInArrow(task, from_arrow_schema(_MANIFEST))
 
     def _commit(self, rows: list[dict], attempt: int) -> None:
         """Commit ``rows`` atomically as (snapshot, attempt), or raise
@@ -292,10 +298,8 @@ class EncodeJob:
             pending = pending.filter(~F.col("_part").isin(*completed))
         if only_parts is not None:
             pending = pending.filter(F.col("_part").isin(*only_parts))
-        shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
-        chunks = encode_dataframe(shuffled, codec=self.codec, chunk_rows=self.chunk_rows, part_col="_part")
         t0 = time.time()
-        manifest = self._write(chunks, attempt)
+        manifest = self._write(pending, attempt).collect()
         # key name shared with the perf ledger (perfbench/layers.py)
         timings["encode_and_stage_write_sec"] = round(time.time() - t0, 3)
 

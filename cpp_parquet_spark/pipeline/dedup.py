@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cpp_parquet_spark.pipeline.text import TOKEN_RE
+from cpp_parquet_spark.session import drop_runtime_zip_finders
 
 # deterministic MinHash parameters; Mersenne-31 keeps a*(s mod p)+b
 # comfortably inside a signed 64-bit long (ANSI mode throws on overflow)
@@ -242,6 +243,7 @@ def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         import numpy as np
         import pandas as pd
 
+        drop_runtime_zip_finders()
         n = len(th_series)
         out = np.zeros(n, dtype=np.int64)
         if n == 0:

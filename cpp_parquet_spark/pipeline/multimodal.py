@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cpp_parquet_spark.session import drop_runtime_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -148,6 +150,7 @@ def extract_features(media: DataFrame, mode: str = "fake") -> DataFrame:
     def run(batches):
         import numpy as np
 
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             lengths, payload = _payload_components(b.column("payload"))
@@ -205,6 +208,7 @@ def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8, mode: str = 
     def run(batches):
         import numpy as np
 
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -296,6 +300,7 @@ def frame_sample(media: DataFrame, n_frames: int = 4, mode: str = "fake") -> Dat
     def run(batches):
         import numpy as np
 
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:

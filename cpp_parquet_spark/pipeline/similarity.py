@@ -19,9 +19,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cpp_parquet_spark.session import drop_runtime_zip_finders
+
 
 def _int_vec(col) -> Column:
-    return F.transform(col, lambda x: F.round(x * 1000).cast("long"))
+    # the product in DOUBLE, as in the SQL oracles: a FLOAT product
+    # rounds first and can land on .5 (0.3195f * 1000 -> 319.5 -> 320)
+    return F.transform(col, lambda x: F.round(x.cast("double") * 1000).cast("long"))
 
 
 def _dot(a, b) -> Column:
@@ -143,6 +147,7 @@ def lsh_band_buckets(
     )
 
     def op(batches):
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -186,6 +191,7 @@ def _assign_centroids(df: DataFrame, centroids: np.ndarray, id_col: str, vec_col
     )
 
     def op(batches):
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -216,6 +222,7 @@ def _probe_lists(
     arrow_out = pa.schema([("qid", pa.int64()), ("cid", pa.int32())])
 
     def op(batches):
+        drop_runtime_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +20,34 @@ MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "1073741824",
     "MALLOC_TRIM_THRESHOLD_": "1073741824",
 }
+
+
+def drop_runtime_zip_finders() -> None:
+    """Stop every Python task from re-reading Spark's runtime archives.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of each task, so that ``--py-files`` shipped since the last task
+    become importable.  On Python 3.11 that makes each cached
+    ``zipimporter`` re-read its archive's central directory: a worker
+    holds ~16 of them over ``pyspark.zip`` (1,328 entries), the py4j zip
+    and the spark-core jar (5,359 entries), ~0.2 s of a core per task
+    before the UDF runs.  Those archives are on the worker path from
+    launch and cannot change under a live worker, so their finders are
+    dropped from ``sys.path_importer_cache``; an import that needs one
+    again rebuilds it from zipimport's module-level directory cache
+    without a re-read.  Archives under ``SparkFiles.getRootDirectory()``
+    (``addPyFile`` zips) keep their finders and still refresh.
+
+    Call it first thing in every UDF (a no-op outside a Spark worker).
+    """
+    from pyspark import SparkFiles
+
+    if not SparkFiles._is_running_on_worker:
+        return
+    shipped = os.path.join(SparkFiles.getRootDirectory(), "")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and not finder.archive.startswith(shipped):
+            del sys.path_importer_cache[path]
 
 
 def apply_malloc_env() -> None:

@@ -28,6 +28,7 @@ from pyspark.sql.types import IntegerType, LongType, StringType, StructField, St
 
 from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS
 from cpp_parquet_spark.parquet_writer import ParquetWriter
+from cpp_parquet_spark.session import drop_runtime_zip_finders
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -71,6 +72,7 @@ def write_dataset(
     def task(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
+        drop_runtime_zip_finders()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         final = os.path.join(directory, f"part-{pid:05d}.parquet")

@@ -530,3 +530,35 @@ def test_partition_for_encoding_bytes_salting(spark):
     # no rows lost or duplicated by the salting
     assert sum(r["cnt"] for r in stats) == 6000
     assert by_repo["megarepo"]["cnt"] == 3000
+
+
+def test_skew_sample_collect_is_bounded_without_plan_stats(spark, monkeypatch):
+    """With no optimizer size estimate the byte gate of the skew sample
+    falls to its floor; the collect must still bring at most the total
+    row and the top 2 * num_partitions keys by sampled bytes to the
+    driver, and a key over the byte budget must still be salted."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    num = 4
+    light = [("go", f"r{k}", "x" * (1100 << 10)) for k in range(12) for _ in range(2)]  # 2.2 MB per key
+    fat = [("py", "fat", f"{i:02d}" + "y" * (3 << 20)) for i in range(12)]  # 36 MB in one key
+    schema = StructType([StructField(c, StringType()) for c in ("lang", "repo", "content")])
+    df = spark.createDataFrame(spark.sparkContext.parallelize(light + fat, 4), schema)
+    assert int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) >= 1 << 60
+
+    collected = []
+    collect = type(df).collect
+
+    def recording(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(df), "collect", recording)
+    # target_rows=100 samples every row; no key is near the rows target
+    out = partition_for_encoding(df, num_partitions=num, target_rows=100)
+    monkeypatch.undo()
+    assert collected and collected[0] <= 1 + 2 * num, collected
+    fat_parts = out.filter(F.col("repo") == "fat").select(F.spark_partition_id().alias("p")).distinct().count()
+    assert fat_parts > 1
+    assert out.count() == len(light) + len(fat)

@@ -316,3 +316,31 @@ def test_old_layout_store_is_rejected(spark, workdir):
         job.chunks(spark)
     with pytest.raises(ValueError, match="old part_id=N directory layout"):
         job.run(_src(spark))
+
+
+def test_store_write_is_one_python_map(spark, workdir, monkeypatch):
+    """EncodeJob encodes and writes each task's chunk file in one Python
+    UDF: the plan ``run`` executes holds exactly one Python map node, so
+    the chunk payloads never go back through the JVM to a second
+    worker."""
+    import re
+
+    src = _src(spark)
+    plans = []
+    collect = type(src).collect
+
+    def recording(self):
+        rows = collect(self)
+        plan = self._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan only
+        plans.append(plan.toString())
+        return rows
+
+    monkeypatch.setattr(type(src), "collect", recording)
+    res = EncodeJob(workdir, num_parts=4, chunk_rows=4096).run(src)
+    monkeypatch.undo()
+    assert res["committed_partitions"] == 4
+    (plan,) = plans
+    assert len(re.findall(r"MapInArrow|MapInPandas|EvalPython", plan)) == 1, plan
+    _assert_same_rows(src, EncodeJob(workdir, num_parts=4).decode(spark, src.schema))
